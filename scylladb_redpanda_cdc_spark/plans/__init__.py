@@ -53,21 +53,17 @@ class QuerySpec:
 #: x121's phase-2 rework, the _embs_fanned corpus-pass restructures
 #: (x54/x111/x112/x113), and the _x2_pairs session cache (x2/x92/x97).
 _REWRITTEN: tuple[str, ...] = (
-    # Round 16 (optimization round 2): the round-15 entries all earned
-    # green r15 grades (CORRECTNESS_r15 heads with exactly those seven),
-    # so entries whose bodies did NOT change again this round are
-    # cleared (x11). Round-16 entries: the five foreachBatch merge
-    # kernels whose per-batch bodies changed again (state writes sized
-    # from prev + the batch's checkpoint-log-priced contribution; the
-    # state-sized width scoped on the batch session; per-batch FS calls
-    # removed — VERDICT r15 tasks 1-2), s15 whose state writer gained
-    # the same prev-bytes threading, x39 because its sizing guard's
-    # admit contract changed underneath it (_is_materialized refuses
-    # bare scans now — task 7), and x61 whose covered-position kernel
-    # was rewritten (explode+distinct -> interval-union fold). Below
-    # the 32 MB gates — every graded SF — the streaming plans are
-    # byte-identical to the floored ones, but the builder bodies
-    # changed, so they re-prove.
+    # Round 17 (simplicity): the round-16 entries all earned green r16
+    # grades (CORRECTNESS_r16 heads with them), so the two whose bodies
+    # did NOT change again this round are cleared (x39, x61 — x61 only
+    # had a docstring fixed). Round-17 entries: the six foreachBatch
+    # kernels whose bodies now route their state versions and drains
+    # through ``streaming/core.py``'s StateVersions +
+    # drain_foreach_batch, with the dormant per-batch merge-width guard
+    # deleted — s10/s21/s22 (the shared incremental MERGE), s14, s15
+    # and s17. Their normalized per-batch plans at sf0.1 are identical
+    # to the parent's (``plans/r17/``), but the builder bodies changed,
+    # so they re-prove. s20/s24 keep their own drains (untouched).
     #
     # Exemption note (ADVICE r15): scratch-PLACEMENT-only hint changes
     # (round 15's `_stage table=` / b43 8x hints) do not enter this
@@ -77,14 +73,12 @@ _REWRITTEN: tuple[str, ...] = (
     # drive does not already. Anything that touches a builder's PLAN
     # or per-batch compute (even when fixture plans stay
     # byte-identical) does enter.
-    "x39_dedup_containment",
     "s10_foreachbatch_upsert",
     "s14_stream_incremental_dedup",
     "s15_stream_heavy_hitters",
     "s17_stream_incremental_mv",
     "s21_stream_corpus_sync",
     "s22_stream_scd2",
-    "x61_boilerplate_strip",
 )
 
 # The round-9 name `_REPROOF` was kept as an alias through rounds 10-11

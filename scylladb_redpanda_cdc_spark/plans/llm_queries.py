@@ -3188,7 +3188,8 @@ def x61_boilerplate_strip(spark, sf_dir):
     so |[p, p+4] ∪ …| is computable exactly by a sorted integer fold:
     contribution of p = greatest(p+4, end) − greatest(p−1, end) — pure
     integer algebra, bit-identical to counting distinct covered
-    positions, with nothing exploded and one exchange fewer."""
+    positions, with nothing exploded (the exchange count is unchanged:
+    12 in both sf0.1 plans, ``plans/r16/x61_sf01_{before,after}.txt``)."""
     d = _docs_fanned(spark, sf_dir)
     toks = d.select("doc_id", words(F.col("text")).alias("ws"))
     top = (

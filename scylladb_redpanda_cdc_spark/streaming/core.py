@@ -13,6 +13,10 @@ Driver contract note: every S* query must come back as a *batch* DataFrame
 completion into a memory/parquet sink and returns the sink's table. The
 memory sink is the TEST harness sink only — the production path is
 ``writeStream.format("kafka")`` / partitioned parquet with the same DAG.
+The foreachBatch kernels (``streaming/ops.py``) keep their standing state
+in :class:`StateVersions` — one parquet version per micro-batch, sized by
+:func:`state_file_count` from the previous version's bytes plus the
+batch's — drained by :func:`drain_foreach_batch`.
 
 Scale posture: state stores are keyed exactly like the shuffles they replace
 (user_id / window / PK), watermarks bound state (S6), and checkpointing
@@ -106,9 +110,7 @@ _SCRATCH_DISK_ROOT = os.environ.get("SG_SCRATCH_DIR") or tempfile.gettempdir()
 #: coalesce/width knobs, fixed with the same 32 MB gate discipline:
 #: below the gate (every fixture SF) placement is byte-identical to the
 #: old behavior, so floors are untouched.
-SCRATCH_TMPFS_GATE_BYTES = int(
-    os.environ.get("SG_SCRATCH_TMPFS_GATE_BYTES", str(32 * 1024 * 1024))
-)
+SCRATCH_TMPFS_GATE_BYTES = 32 * 1024 * 1024
 
 
 def tmpdir(prefix: str, bytes_hint: int | None = None) -> str:
@@ -224,31 +226,27 @@ def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: parallelism for per-store overhead. The production path (writeStream to
 #: Kafka / partitioned parquet on a real cluster) never passes through
 #: these helpers and keeps the session's own setting.
-STREAM_SINK_SHUFFLE_PARTITIONS = int(os.environ.get("SG_STREAM_SINK_SHUFFLE", "1"))
+STREAM_SINK_SHUFFLE_PARTITIONS = 1
 
 #: Staged-source bytes below which the micro-batch plan width stays at the
 #: fixture floor (:data:`STREAM_SINK_SHUFFLE_PARTITIONS`) — the same 32 MB
 #: gate discipline as ``operators/scale.py::FANOUT_GATE_BYTES``: every
 #: graded SF sits far below it, so fixture plans and floors are
 #: byte-identical; only corpus-scale streams size up.
-STREAM_WIDTH_GATE_BYTES = int(
-    os.environ.get("SG_STREAM_WIDTH_GATE_BYTES", str(32 * 1024 * 1024))
-)
+STREAM_WIDTH_GATE_BYTES = 32 * 1024 * 1024
 
 #: Target staged-source parquet bytes per micro-batch shuffle task above
 #: the gate. Parquet expands ~4x in flight (decompression + row overhead,
 #: the decade-4 b31 measurement), so 8 MB of source per task bounds
 #: in-flight volume at ~32 MB — and at the round-13 x100 corpus
 #: (~175 MB staged changelog) yields a width in the same band as the
-#: hand-set SG_STREAM_SINK_SHUFFLE=32 the decade probes validated.
-STREAM_TARGET_TASK_SOURCE_BYTES = int(
-    os.environ.get("SG_STREAM_TARGET_TASK_SOURCE_BYTES", str(8 * 1024 * 1024))
-)
+#: hand-set width of 32 the decade probes validated.
+STREAM_TARGET_TASK_SOURCE_BYTES = 8 * 1024 * 1024
 
 #: Hard cap on the adaptive width — past this a deployment resizes the
 #: target instead (the FANOUT_MAX_PARTITIONS convention, scaled to the
 #: per-micro-batch volumes streams actually carry).
-STREAM_WIDTH_MAX = int(os.environ.get("SG_STREAM_WIDTH_MAX", "2048"))
+STREAM_WIDTH_MAX = 2048
 
 _FILE_SOURCE_RE = re.compile(r"FileSource\[([^\]]+)\]")
 
@@ -273,8 +271,8 @@ def stream_shuffle_width(spark: SparkSession, sdf: DataFrame | None) -> int:
     The round-13 decade probes showed the fixed default (1 — correct for
     KB-sized fixture batches where per-state-store overhead dominates) is
     a fixture knob, not a deployment posture: at x100 it serialized
-    5.5 M-row merge joins on one core and the probes had to hand-set
-    ``SG_STREAM_SINK_SHUFFLE=32``. This helper applies the
+    5.5 M-row merge joins on one core and the probes had to hand-set a
+    width of 32. This helper applies the
     ``state_file_count`` discipline to the PLAN width: below
     :data:`STREAM_WIDTH_GATE_BYTES` of staged source (every fixture SF —
     a driver-side Hadoop FS call, no Spark job) it returns the floor and
@@ -306,9 +304,7 @@ from scylladb_redpanda_cdc_spark.operators.scale import (  # noqa: E402
 #: Target on-disk parquet bytes per file for foreachBatch STATE writes.
 #: 32 MB of parquet ≈ 100-150 MB of in-flight rows per write task — small
 #: enough to bound task memory, large enough to keep file counts sane.
-STATE_TARGET_FILE_BYTES = int(
-    os.environ.get("SG_STATE_TARGET_FILE_BYTES", str(32 * 1024 * 1024))
-)
+STATE_TARGET_FILE_BYTES = 32 * 1024 * 1024
 
 
 def _uri_to_local(path: str) -> str:
@@ -368,19 +364,13 @@ def batch_source_bytes(checkpoint_dir: str, batch_id: int) -> int:
     return total
 
 
-def state_file_count(
-    spark: SparkSession,
-    prev_path: str | None,
-    floor: int,
-    extra_bytes: int = 0,
-    prev_bytes: int | None = None,
-) -> int:
+def state_file_count(nbytes: int | None, floor: int) -> int:
     """Partition count for a foreachBatch state-version write: target
     ~:data:`STATE_TARGET_FILE_BYTES` of parquet per file, estimated from
-    the PREVIOUS version's on-disk size PLUS the arriving batch's
-    contribution (``extra_bytes`` — the batch's priced source bytes, see
-    :func:`batch_input_bytes`), floored at the caller's fixed count so
-    fixture-scale plans and floors stay byte-identical.
+    ``nbytes`` — the previous version's on-disk size PLUS the arriving
+    batch's priced contribution (:class:`StateVersions` sums them) —
+    floored at the caller's fixed count so fixture-scale plans and floors
+    stay byte-identical. Unpriced bytes (``None`` / ``0``) give the floor.
 
     Round 16 (VERDICT r15 task 1): sizing from the previous version ALONE
     lags the written size by one batch — bounded ≤2× under steady drains,
@@ -391,11 +381,6 @@ def state_file_count(
     batch), so the write task volume stays ≤ the per-file target at any
     drain shape; the cost of an over-estimate is only smaller files.
 
-    ``prev_bytes``: callers that already track the previous version's
-    on-disk size (priced once per write) pass it here and no filesystem
-    call is made; ``None`` keeps the old behavior of pricing
-    ``prev_path`` via the Hadoop FS API.
-
     Why not a bare ``coalesce(floor)``: coalesce propagates UP the
     physical plan — it caps the parallelism of the entire final merge
     stage, not just the file count. The round-13 ×100 decade-3 probe
@@ -404,110 +389,82 @@ def state_file_count(
     would put one task past executor memory. Sizing the count from the
     state's actual bytes keeps per-task volume bounded at ANY corpus
     size while file count stays proportional to data — the "target file
-    SIZE" rule real lakehouse writers use. The Hadoop FS API prices
-    HDFS/S3 state dirs the same way as local ones; on any failure the
-    floor is returned (never wrong, merely small)."""
-    nbytes = int(extra_bytes or 0)
-    if prev_bytes is not None:
-        nbytes += prev_bytes
-    elif prev_path:
-        try:
-            jvm = spark._jvm
-            p = jvm.org.apache.hadoop.fs.Path(prev_path)
-            fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
-            nbytes += fs.getContentSummary(p).getLength()
-        except Exception:
-            return floor
-    if nbytes <= 0:
-        return floor
+    SIZE" rule real lakehouse writers use."""
     import math
 
-    return max(floor, min(4096, math.ceil(nbytes / STATE_TARGET_FILE_BYTES)))
-
-
-def state_merge_width(
-    spark: SparkSession,
-    prev_path: str | None,
-    prev_bytes: int | None = None,
-) -> int | None:
-    """Per-BATCH plan width for a foreachBatch state merge, sized from the
-    PREVIOUS state version's on-disk bytes — or ``None`` when the ambient
-    width already suffices (the caller then changes nothing).
-
-    :func:`stream_shuffle_width` sizes the whole stream run from the
-    staged SOURCE bytes, but a merge batch's touched-key recompute (s22's
-    history re-lead, s10/s17's affected-key compaction) shuffles volume
-    that tracks the accumulated STATE, not the arriving micro-batch — the
-    round-14 ×1000 drill measured a 302 MB task in s22's re-lead stage
-    under the source-sized width (VERDICT r14 task 3). Under the
-    availableNow test harness the ambient width is already sized from the
-    FULL staged source, which bounds the state from above, so this guard
-    cannot fire there (round-16 attribution); it exists for the
-    continuous-trigger deployment posture, where the session width is a
-    fixed cluster conf and a standing state outgrows it during catch-up.
-    Same gate discipline as every sizing guard: below
-    :data:`STREAM_WIDTH_GATE_BYTES` of state (every fixture SF) this
-    returns ``None`` and micro-batch plans stay byte-identical to the
-    floored ones; above it, the width targets
-    ~:data:`STREAM_TARGET_TASK_SOURCE_BYTES` of state parquet per task
-    (the same ~4× in-flight expansion estimate), capped at
-    :data:`STREAM_WIDTH_MAX`, and is returned only when it beats the
-    ambient ``spark.sql.shuffle.partitions``. Results are width-invariant
-    for every merge that runs under it (``tests/test_knob_invariance.py``
-    pins the stream family), so this trades only task volume against
-    per-task overhead.
-
-    ``prev_bytes`` (round 16): callers that track the previous version's
-    size (priced once per write) pass it and NO per-batch filesystem call
-    is made — the round-15 form paid one ``getContentSummary`` per
-    micro-batch in five stream kernels for a guard that is dormant at
-    every fixture SF."""
-    if prev_bytes is None:
-        if not prev_path:
-            return None
-        prev_bytes = _fs_bytes(spark, prev_path)
-    if prev_bytes is None or prev_bytes < STREAM_WIDTH_GATE_BYTES:
-        return None
-    import math
-
-    n = min(
-        STREAM_WIDTH_MAX, math.ceil(prev_bytes / STREAM_TARGET_TASK_SOURCE_BYTES)
+    return max(
+        floor, min(4096, math.ceil((nbytes or 0) / STATE_TARGET_FILE_BYTES))
     )
-    try:
-        ambient = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
-    except Exception:
-        ambient = 200
-    return n if n > ambient else None
 
 
-@contextmanager
-def scoped_state_merge_width(
-    spark: SparkSession,
-    prev_path: str | None,
-    batch_session: SparkSession | None = None,
-    prev_bytes: int | None = None,
-):
-    """``scoped_shuffle`` at :func:`state_merge_width`'s state-sized width
-    for ONE merge batch's planning — a no-op (ambient width untouched)
-    whenever the helper returns ``None``, i.e. at every fixture SF.
+class StateVersions:
+    """One standing state table of a foreachBatch kernel, kept as a new
+    parquet version ``<base>/v{batchId}`` per micro-batch — the one
+    state-version primitive the S10/S14/S15/S17/S21/S22 kernels share
+    (s17 keeps two: per-key state and the MV).
 
-    ``batch_session`` (round 16, ADVICE r15): ``foreachBatch`` hands the
-    body a ``batch_df`` bound to the stream's CLONED session, and an
-    executed plan takes its shuffle width from the receiver Dataset's own
-    session — so a width set only on the outer session never reaches
-    batch-rooted plans (s14's classify write; s10/s22's merge unions that
-    reference ``batch_df``). Pass ``batch_df.sparkSession`` and the width
-    is scoped (set + restored) on BOTH sessions."""
-    n = state_merge_width(spark, prev_path, prev_bytes=prev_bytes)
-    if n is None:
-        yield
-        return
-    with scoped_shuffle(spark, n):
-        if batch_session is not None and batch_session is not spark:
-            with scoped_shuffle(batch_session, n):
-                yield
-        else:
-            yield
+    - ``base``: a scratch dir placed by ``bytes_hint`` (:func:`tmpdir`'s
+      tmpfs gate; ``None`` keeps the preferred root);
+    - ``path`` / ``bytes``: the live version and its on-disk bytes, priced
+      once right after each write, so the next write is sized with no
+      further filesystem call;
+    - :meth:`read`: the live version (``None`` before the first batch);
+    - :meth:`write`: ``coalesce(state_file_count(prev + batch, floor))``.
+
+    Pair it with :func:`drain_foreach_batch`, which hands each batch body
+    the ``batch_bytes`` :meth:`write` sizes with. A pricing failure leaves
+    ``bytes`` at 0, so the next write is still sized from the batch's own
+    contribution rather than dropping to the bare floor."""
+
+    def __init__(
+        self,
+        spark: SparkSession,
+        prefix: str,
+        floor: int,
+        bytes_hint: int | None = None,
+    ) -> None:
+        self.spark = spark
+        self.floor = floor
+        self.base = tmpdir(prefix, bytes_hint=bytes_hint)
+        self.path: str | None = None
+        self.bytes = 0
+
+    def read(self) -> DataFrame | None:
+        return None if self.path is None else self.spark.read.parquet(self.path)
+
+    def write(self, df: DataFrame, batch_id: int, batch_bytes: int = 0) -> None:
+        path = os.path.join(self.base, f"v{batch_id}")
+        n = state_file_count(self.bytes + batch_bytes, self.floor)
+        df.coalesce(n).write.mode("overwrite").parquet(path)
+        self.path = path
+        self.bytes = _fs_bytes(self.spark, path) or 0
+
+    def final(self) -> DataFrame:
+        assert self.path is not None, "stream produced no batches"
+        return self.spark.read.parquet(self.path)
+
+
+def drain_foreach_batch(sdf: DataFrame, body) -> None:
+    """Run ``sdf`` to completion (availableNow) through a checkpointed
+    ``foreachBatch``, under :func:`scoped_stream_shuffle`'s source-sized
+    width, calling ``body(batch_df, batch_id, batch_bytes)`` per
+    micro-batch — ``batch_bytes`` is the batch's priced source
+    contribution (:func:`batch_source_bytes` over this drain's own
+    checkpoint), what :meth:`StateVersions.write` adds to the previous
+    version's bytes."""
+    ckpt = tmpdir("ckpt")
+
+    def run(batch_df: DataFrame, batch_id: int) -> None:
+        body(batch_df, batch_id, batch_source_bytes(ckpt, batch_id))
+
+    with scoped_stream_shuffle(sdf):
+        q = (
+            sdf.writeStream.foreachBatch(run)
+            .option("checkpointLocation", ckpt)
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
 
 
 @contextmanager

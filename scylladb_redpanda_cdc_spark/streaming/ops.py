@@ -11,9 +11,12 @@ final state is identical for ANY micro-batch partitioning of the log — that
 invariance is what makes the streaming and batch answers provably equal.
 
 Scale: state lives as parquet partitioned by the event key; each merge
-shuffles only on that key (the topic's own partitioning). On a real
-deployment the alternating-directory swap becomes an atomic table-format
-commit (Delta/Iceberg MERGE); the DAG is the same.
+shuffles only on that key (the topic's own partitioning). Every kernel's
+state versions and its checkpointed availableNow drain go through one
+primitive, ``streaming/core.py``'s :class:`StateVersions` +
+:func:`drain_foreach_batch`. On a real deployment the per-batch version
+swap becomes an atomic table-format commit (Delta/Iceberg MERGE); the DAG
+is the same.
 """
 
 from __future__ import annotations
@@ -26,11 +29,9 @@ from pyspark.sql import DataFrame, SparkSession
 from scylladb_redpanda_cdc_spark.operators.cdc import materialize_latest
 from scylladb_redpanda_cdc_spark.sources.changelog import synth_changelog
 from scylladb_redpanda_cdc_spark.streaming.core import (
-    _fs_bytes,
-    batch_source_bytes,
+    StateVersions,
+    drain_foreach_batch,
     scoped_conf,
-    scoped_state_merge_width,
-    scoped_stream_shuffle,
     staged_dir_valid,
     state_file_count,
     stream_source_bytes,
@@ -48,7 +49,7 @@ CHANGELOG_STREAM_DDL = (
 #: resume after downtime) can carry arbitrarily many keys; broadcasting
 #: those would blow the driver/executor broadcast limit, so past the cap
 #: the merge falls back to a shuffled join and lets AQE pick the strategy.
-BROADCAST_KEY_CAP = int(os.environ.get("SG_BROADCAST_KEY_CAP", "2000000"))
+BROADCAST_KEY_CAP = 2_000_000
 
 _staged_changelogs: dict[tuple[str, str, int], str] = {}
 
@@ -57,14 +58,10 @@ _staged_changelogs: dict[tuple[str, str, int], str] = {}
 #: from 1.76 GB of orders parquet = 3.6×; 4 adds headroom — the same
 #: conservative posture as b31's fact-side multiplier, decade-checked
 #: there at ~2.2× actual).
-CHANGELOG_INFLIGHT_MULTIPLIER = int(
-    os.environ.get("SG_CHANGELOG_INFLIGHT_MULTIPLIER", "4")
-)
+CHANGELOG_INFLIGHT_MULTIPLIER = 4
 
 #: Target in-flight bytes per staging-WRITE task above the gate.
-STAGE_WRITE_TARGET_TASK_BYTES = int(
-    os.environ.get("SG_STAGE_WRITE_TARGET_TASK_BYTES", str(128 * 1024 * 1024))
-)
+STAGE_WRITE_TARGET_TASK_BYTES = 128 * 1024 * 1024
 
 
 def _changelog_files_per_batch(spark: SparkSession, sf_dir: str, n_files: int) -> int:
@@ -131,13 +128,14 @@ def stage_changelog_stream(
         ).parquet(stage)
         if inner > 1:
             # pin file→batch grouping: part files sort in partition
-            # order; give batch i's files mtimes strictly older than
-            # batch i+1's so oldest-first draining groups them.
-            now = _time.time()
+            # order; one second apart in that order, so every file is
+            # strictly older than the next and oldest-first draining of
+            # `inner` files per trigger groups exactly parts[i*inner:
+            # (i+1)*inner] into batch i, for any inner.
             parts = sorted(_glob.glob(os.path.join(stage, "part-*.parquet")))
+            first = _time.time() - 600 - len(parts)
             for j, p in enumerate(parts):
-                mtime = now - 600 + (j // inner) * 60 + (j % inner)
-                os.utime(p, (mtime, mtime))
+                os.utime(p, (first + j, first + j))
         _staged_changelogs[cache_key] = stage
     return (
         spark.readStream.schema(CHANGELOG_STREAM_DDL)
@@ -259,11 +257,11 @@ def _run_incremental_merge(changes: DataFrame, key_cols: list[str], compact) -> 
     """
     from pyspark.sql import functions as F
 
-    spark = changes.sparkSession
-    base = tmpdir("state", bytes_hint=stream_source_bytes(changes))
-    current: dict[str, str | int | None] = {"path": None, "bytes": 0}
+    state = StateVersions(
+        changes.sparkSession, "state", 16, bytes_hint=stream_source_bytes(changes)
+    )
 
-    def merge(batch_df: DataFrame, batch_id: int) -> None:
+    def merge(batch_df: DataFrame, batch_id: int, batch_bytes: int) -> None:
         # Scale shape: the full state is NEVER shuffled. Keys untouched by
         # this batch pass through via a broadcast anti-join; only touched
         # keys (semi-join ∪ batch) go through the compaction window, which
@@ -275,36 +273,13 @@ def _run_incremental_merge(changes: DataFrame, key_cols: list[str], compact) -> 
         # persist: batch_latest feeds three consumers (key broadcast x2 +
         # union) and prev two (anti + semi) — without caching each would
         # recompute/rescan per consumer.
-        # Round 15 (VERDICT r14 task 3): the touched-key recompute's
-        # volume tracks accumulated STATE, not the arriving batch (a
-        # catch-up batch touching most keys re-leads most of the
-        # history), so the batch plans under a state-sized width when the
-        # state outgrows the ambient one (the continuous-trigger catch-up
-        # posture; the availableNow harness's source-sized ambient width
-        # already covers it). No-op below the 32 MB gate — fixture plans
-        # byte-identical. Round 16: the width is scoped on the BATCH
-        # session too (batch-rooted plans take their width from it —
-        # ADVICE r15), and the state size is the one priced at the last
-        # write, so the hot loop makes no filesystem calls here.
-        with scoped_state_merge_width(
-            spark,
-            current["path"],
-            batch_session=batch_df.sparkSession,
-            prev_bytes=current["bytes"],
-        ):
-            _merge_inner(batch_df, batch_id)
-
-    def _merge_inner(batch_df: DataFrame, batch_id: int) -> None:
         batch_latest = compact(batch_df).persist()
         n_batch_keys = batch_latest.count()
-        prev = (
-            spark.read.parquet(current["path"]).persist()
-            if current["path"] is not None
-            else None
-        )
+        prev = state.read()
         if prev is None:
             merged = batch_latest
         else:
+            prev.persist()
             # one key probe marks touched keys; split by the marker
             # (anti+semi as two joins would probe the same hash table
             # twice). Broadcast only while the batch key set is small —
@@ -325,41 +300,17 @@ def _run_incremental_merge(changes: DataFrame, key_cols: list[str], compact) -> 
                 .unionByName(batch_latest)
             )
             merged = unaffected.unionByName(compact(affected))
-        new_path = os.path.join(base, f"v{batch_id}")
-        # cap state-file count: unaffected keeps prev's partitioning and
-        # affected adds the window's shuffle partitions, so without a
-        # coalesce the state gains ~shuffle.partitions files per batch
-        # (compounding read fan-out). Real deployments target file SIZE
-        # here; a fixed small count is the local equivalent. Sized from
-        # prev + this batch's contribution (round 16 — the prev-only
-        # estimate lagged the written size by one batch: the r14 ×1000
-        # s22 drill's 302 MB write task).
-        merged.coalesce(
-            state_file_count(
-                spark,
-                current["path"],
-                16,
-                extra_bytes=batch_source_bytes(ckpt, batch_id),
-                prev_bytes=current["bytes"],
-            )
-        ).write.mode("overwrite").parquet(new_path)
-        current["path"] = new_path
-        current["bytes"] = _fs_bytes(spark, new_path) or 0
+        # the coalesce caps state-file count: unaffected keeps prev's
+        # partitioning and affected adds the window's shuffle partitions,
+        # so without it the state gains ~shuffle.partitions files per
+        # batch (compounding read fan-out)
+        state.write(merged, batch_id, batch_bytes)
         batch_latest.unpersist()
         if prev is not None:
             prev.unpersist()
 
-    ckpt = tmpdir("ckpt")
-    with scoped_stream_shuffle(changes):
-        q = (
-            changes.writeStream.foreachBatch(merge)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    assert current["path"] is not None, "stream produced no batches"
-    return spark.read.parquet(current["path"])
+    drain_foreach_batch(changes, merge)
+    return state.final()
 
 
 def foreachbatch_upsert(
@@ -505,27 +456,9 @@ def incremental_dedup_stream(docs: DataFrame) -> DataFrame:
     spark = docs.sparkSession
     docs_hint = stream_source_bytes(docs)
     out = tmpdir("dedup_out", bytes_hint=docs_hint)
-    idx_base = tmpdir("dedup_idx", bytes_hint=docs_hint)
-    current: dict[str, str | int | None] = {"path": None, "bytes": 0}
+    index = StateVersions(spark, "dedup_idx", 8, bytes_hint=docs_hint)
 
-    def classify(batch_df: DataFrame, batch_id: int) -> None:
-        # State-sized batch width above the gate (the shuffled-join
-        # fallback past BROADCAST_KEY_CAP probes the index, whose volume
-        # tracks the standing state); no-op at every fixture SF. Round 16:
-        # scoped on the batch session too — the classify write is rooted
-        # at batch_df, which plans under the stream's CLONED session, so
-        # the outer-session width never reached it (ADVICE r15) — and the
-        # state size is the one priced at the last write (no per-batch
-        # filesystem call).
-        with scoped_state_merge_width(
-            spark,
-            current["path"],
-            batch_session=batch_df.sparkSession,
-            prev_bytes=current["bytes"],
-        ):
-            _classify_inner(batch_df, batch_id)
-
-    def _classify_inner(batch_df: DataFrame, batch_id: int) -> None:
+    def classify(batch_df: DataFrame, batch_id: int, batch_bytes: int) -> None:
         hashed = batch_df.select(
             "doc_id", F.sha2(F.lower(F.trim("text")), 256).alias("text_hash")
         ).persist()
@@ -534,11 +467,7 @@ def incremental_dedup_stream(docs: DataFrame) -> DataFrame:
         ).persist()
         n_hashes = firsts.count()
         small = n_hashes <= BROADCAST_KEY_CAP
-        idx = (
-            spark.read.parquet(current["path"])
-            if current["path"] is not None
-            else None
-        )
+        idx = index.read()
         if idx is None:
             hits = None
         else:
@@ -560,45 +489,22 @@ def incremental_dedup_stream(docs: DataFrame) -> DataFrame:
             .when(F.col("doc_id") > F.col("first_id"), "dup_in_batch")
             .otherwise("keep")
         )
-        # verdicts are batch-sized: size their file count from the batch's
-        # own priced bytes (round 16 — the index-prev proxy under-sized a
-        # catch-up batch's write by the same one-batch-lag class as s22's)
-        batch_bytes = batch_source_bytes(ckpt, batch_id)
+        # verdicts are batch-sized and append-only (not a state version):
+        # size their file count from the batch's own priced bytes
         enriched.select(
             "doc_id", "text_hash", verdict.alias("verdict")
-        ).coalesce(
-            state_file_count(spark, None, 4, extra_bytes=batch_bytes)
-        ).write.mode("append").parquet(out)
+        ).coalesce(state_file_count(batch_bytes, 4)).write.mode("append").parquet(out)
         new_hashes = firsts.select("text_hash")
         merged = (
             new_hashes
             if idx is None
             else idx.unionByName(new_hashes).distinct()
         )
-        new_path = os.path.join(idx_base, f"v{batch_id}")
-        merged.coalesce(
-            state_file_count(
-                spark,
-                current["path"],
-                8,
-                extra_bytes=batch_bytes,
-                prev_bytes=current["bytes"],
-            )
-        ).write.mode("overwrite").parquet(new_path)
-        current["path"] = new_path
-        current["bytes"] = _fs_bytes(spark, new_path) or 0
+        index.write(merged, batch_id, batch_bytes)
         hashed.unpersist()
         firsts.unpersist()
 
-    ckpt = tmpdir("ckpt")
-    with scoped_stream_shuffle(docs):
-        q = (
-            docs.writeStream.foreachBatch(classify)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    drain_foreach_batch(docs, classify)
     return spark.read.parquet(out)
 
 
@@ -623,14 +529,10 @@ def incremental_mv_stream(
 
     spark = changes.sparkSession
     log_hint = stream_source_bytes(changes)
-    state_base = tmpdir("mv_state", bytes_hint=log_hint)
-    mv_base = tmpdir("mv_agg", bytes_hint=log_hint)
-    current: dict[str, str | int | None] = {
-        "state": None,
-        "mv": None,
-        "state_bytes": 0,
-        "mv_bytes": 0,
-    }
+    state = StateVersions(spark, "mv_state", 16, bytes_hint=log_hint)
+    # the MV is customers-sized: a batch's contribution to it is bounded
+    # by the batch itself, so prev + batch bounds its write too
+    mv = StateVersions(spark, "mv_agg", 4, bytes_hint=log_hint)
     cents = F.floor(F.col("totalprice") * 100).cast("long")
 
     def contrib(df: DataFrame) -> DataFrame:
@@ -640,34 +542,18 @@ def incremental_mv_stream(
             .agg(F.count("*").alias("n"), F.sum(cents).alias("c"))
         )
 
-    def merge(batch_df: DataFrame, batch_id: int) -> None:
-        # State-sized batch width above the gate (s10's discipline — see
-        # _run_incremental_merge); no-op at every fixture SF. Round 16:
-        # scoped on the batch session too, state size from the last
-        # write's pricing (no per-batch filesystem call).
-        with scoped_state_merge_width(
-            spark,
-            current["state"],
-            batch_session=batch_df.sparkSession,
-            prev_bytes=current["state_bytes"],
-        ):
-            _merge_inner(batch_df, batch_id)
-
-    def _merge_inner(batch_df: DataFrame, batch_id: int) -> None:
+    def merge(batch_df: DataFrame, batch_id: int, batch_bytes: int) -> None:
         batch_latest = materialize_latest(
             batch_df, key_cols, drop_deletes=False
         ).persist()
         n_batch_keys = batch_latest.count()
-        prev = (
-            spark.read.parquet(current["state"]).persist()
-            if current["state"] is not None
-            else None
-        )
+        prev = state.read()
         if prev is None:
             affected_old = None
             merged_affected = batch_latest
             merged = batch_latest
         else:
+            prev.persist()
             batch_keys = batch_latest.select(*key_cols).withColumn(
                 "__hit", F.lit(1)
             )
@@ -692,11 +578,7 @@ def incremental_mv_stream(
             if affected_old is not None
             else new_c.limit(0)
         )
-        mv_prev = (
-            spark.read.parquet(current["mv"])
-            if current["mv"] is not None
-            else None
-        )
+        mv_prev = mv.read()
         z = F.lit(0).cast("long")
         diff = (
             new_c.withColumnRenamed("n", "n_n").withColumnRenamed("c", "n_c")
@@ -722,49 +604,16 @@ def incremental_mv_stream(
                 + F.coalesce("n_c", z)
             ).alias("revenue_cents"),
         )
-        state_path = os.path.join(state_base, f"v{batch_id}")
-        mv_path = os.path.join(mv_base, f"v{batch_id}")
-        batch_bytes = batch_source_bytes(ckpt, batch_id)
-        merged.coalesce(
-            state_file_count(
-                spark,
-                current["state"],
-                16,
-                extra_bytes=batch_bytes,
-                prev_bytes=current["state_bytes"],
-            )
-        ).write.mode("overwrite").parquet(state_path)
-        # the MV is customers-sized: a batch's contribution to it is
-        # bounded by the batch itself, so prev + batch bounds the write
-        mv_new.coalesce(
-            state_file_count(
-                spark,
-                current["mv"],
-                4,
-                extra_bytes=batch_bytes,
-                prev_bytes=current["mv_bytes"],
-            )
-        ).write.mode("overwrite").parquet(mv_path)
-        current["state"] = state_path
-        current["mv"] = mv_path
-        current["state_bytes"] = _fs_bytes(spark, state_path) or 0
-        current["mv_bytes"] = _fs_bytes(spark, mv_path) or 0
+        state.write(merged, batch_id, batch_bytes)
+        mv.write(mv_new, batch_id, batch_bytes)
         batch_latest.unpersist()
         if prev is not None:
             prev.unpersist()
         if affected_old is not None:
             affected_old.unpersist()
 
-    ckpt = tmpdir("ckpt")
-    with scoped_stream_shuffle(changes):
-        q = (
-            changes.writeStream.foreachBatch(merge)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    final = spark.read.parquet(current["mv"])
+    drain_foreach_batch(changes, merge)
+    final = mv.final()
     return final.filter(F.col("n_live") > 0)
 
 
@@ -790,45 +639,28 @@ def heavy_hitters_stream(docs: DataFrame) -> DataFrame:
 
     from scylladb_redpanda_cdc_spark.operators.llm import words
 
-    spark = docs.sparkSession
-    state_base = tmpdir("hh_state")
-    current: dict[str, str | int | None] = {"path": None, "bytes": 0}
+    state = StateVersions(docs.sparkSession, "hh_state", 8)
 
-    def update(batch_df: DataFrame, batch_id: int) -> None:
+    def update(batch_df: DataFrame, batch_id: int, _batch_bytes: int) -> None:
         counts = (
             batch_df.select(F.explode(words(F.col("text"))).alias("tok"))
             .groupBy("tok")
             .agg(F.count("*").alias("n"))
         )
-        if current["path"] is not None:
-            state = spark.read.parquet(current["path"])
+        prev = state.read()
+        if prev is not None:
             counts = (
-                state.unionByName(counts)
+                prev.unionByName(counts)
                 .groupBy("tok")
                 .agg(F.sum("n").alias("n"))
             )
-        new_path = os.path.join(state_base, f"v{batch_id}")
         # vocabulary-sized state: the batch's NEW-token contribution is
-        # zipf-bounded, far under the batch's raw bytes — prev alone (from
-        # the last write's pricing, no filesystem call) is the honest
-        # estimate here
-        counts.coalesce(
-            state_file_count(
-                spark, current["path"], 8, prev_bytes=current["bytes"]
-            )
-        ).write.mode("overwrite").parquet(new_path)
-        current["path"] = new_path
-        current["bytes"] = _fs_bytes(spark, new_path) or 0
+        # zipf-bounded, far under the batch's raw bytes — prev alone is
+        # the honest estimate here
+        state.write(counts, batch_id)
 
-    with scoped_stream_shuffle(docs):
-        q = (
-            docs.writeStream.foreachBatch(update)
-            .option("checkpointLocation", tmpdir("ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    final = spark.read.parquet(current["path"])
+    drain_foreach_batch(docs, update)
+    final = state.final()
     return (
         final.select("tok", F.col("n").cast("long").alias("n"))
         .orderBy(F.col("n").desc(), F.col("tok").asc())

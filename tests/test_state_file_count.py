@@ -3,11 +3,13 @@
 The round-13 ×100 probe showed a fixed ``coalesce(16)`` collapsing s17's
 whole merge stage (one 643 MB task at decade 3); the fix targets
 ~STATE_TARGET_FILE_BYTES of parquet per file, estimated from the previous
-state version's on-disk size. This file pins the helper's contract:
+state version's on-disk size plus the arriving batch's. This file pins
+the helper's contract and the StateVersions writes that use it:
 fixture-scale writes keep the caller's floor (plans and floors stay
 byte-identical), the count grows proportionally once the state exceeds
-the target, errors degrade to the floor (never wrong, merely small), and
-the 4096 cap bounds file-count explosions.
+the target, unpriced bytes degrade to the floor (never wrong, merely
+small) without dropping the batch's contribution, and the 4096 cap
+bounds file-count explosions.
 """
 
 from __future__ import annotations
@@ -19,22 +21,21 @@ from pyspark.sql import functions as F
 from scylladb_redpanda_cdc_spark.streaming import core
 
 
-def _dir_bytes(path: str) -> int:
-    total = 0
-    for root, _dirs, files in os.walk(path):
-        for f in files:
-            total += os.path.getsize(os.path.join(root, f))
-    return total
+def _parts(path: str) -> int:
+    return len([f for f in os.listdir(path) if f.endswith(".parquet")])
 
 
-def test_no_previous_version_returns_floor(spark):
-    assert core.state_file_count(spark, None, 16) == 16
-    assert core.state_file_count(spark, "", 4) == 4
+def test_no_previous_version_returns_floor():
+    assert core.state_file_count(0, 16) == 16
+    assert core.state_file_count(None, 4) == 4
 
 
 def test_missing_path_degrades_to_floor(spark, tmp_path):
+    """A path that cannot be priced yields None, which sizes to the floor
+    (never wrong, merely small)."""
     missing = str(tmp_path / "never-written")
-    assert core.state_file_count(spark, missing, 8) == 8
+    assert core._fs_bytes(spark, missing) is None
+    assert core.state_file_count(core._fs_bytes(spark, missing), 8) == 8
 
 
 def test_fixture_scale_state_keeps_floor(spark, tmp_path):
@@ -43,70 +44,78 @@ def test_fixture_scale_state_keeps_floor(spark, tmp_path):
     recorded floors) byte-identical to the pre-helper constants."""
     p = str(tmp_path / "v0")
     spark.range(100).write.parquet(p)
-    assert core.state_file_count(spark, p, 16) == 16
+    assert core.state_file_count(core._fs_bytes(spark, p), 16) == 16
 
 
 def test_count_scales_with_state_bytes(spark, tmp_path, monkeypatch):
-    """Once the previous version exceeds the target, the count is
-    ceil(bytes/target) — proportional to data, not a fixed cap."""
+    """Once the state exceeds the target, the count is ceil(bytes/target)
+    — proportional to data, not a fixed cap."""
     p = str(tmp_path / "v1")
     spark.range(5000).select(
         F.col("id"), F.sha2(F.col("id").cast("string"), 256).alias("h")
     ).write.parquet(p)
-    nbytes = _dir_bytes(p)
+    nbytes = core._fs_bytes(spark, p)
     assert nbytes > 0
-    # Hadoop's getContentSummary counts the same files os.walk sees
-    # (plus _SUCCESS, which os.path.getsize also sees — both local).
     monkeypatch.setattr(core, "STATE_TARGET_FILE_BYTES", max(1, nbytes // 3))
-    got = core.state_file_count(spark, p, 1)
+    got = core.state_file_count(nbytes, 1)
     assert 3 <= got <= 5  # ceil(n / (n//3)) with rounding slack
     # the floor still wins when it is larger than the byte-derived count
-    assert core.state_file_count(spark, p, 64) == 64
+    assert core.state_file_count(nbytes, 64) == 64
 
 
-def test_count_is_capped_at_4096(spark, tmp_path, monkeypatch):
-    p = str(tmp_path / "v2")
-    spark.range(1000).write.parquet(p)
+def test_count_is_capped_at_4096(monkeypatch):
     monkeypatch.setattr(core, "STATE_TARGET_FILE_BYTES", 1)
-    assert core.state_file_count(spark, p, 4) == 4096
+    assert core.state_file_count(10_000, 4) == 4096
+
+
+def _wide(spark, n: int = 4000):
+    """A frame with 64 non-empty partitions, so coalesce(k) for k <= 64
+    writes exactly k files."""
+    return spark.range(n).repartition(64).select(
+        F.col("id"), F.sha2(F.col("id").cast("string"), 256).alias("h")
+    )
 
 
 def test_write_sized_from_prev_plus_batch_contribution(
-    spark, tmp_path, monkeypatch
+    spark, monkeypatch
 ):
     """Round 16 (VERDICT r15 task 1): sizing from the previous version
     ALONE lags the written size by one batch — the r14 ×1000 s22 drill's
     302 MB write task was v2 sized from v1 during a 3-batch catch-up.
-    prev + the batch's priced contribution bounds the estimate from
-    above, so the per-task write volume stays at the target for ANY
-    drain shape."""
-    p = str(tmp_path / "v1")
-    spark.range(2000).select(
-        F.col("id"), F.sha2(F.col("id").cast("string"), 256).alias("h")
-    ).write.parquet(p)
-    nbytes = _dir_bytes(p)
-    monkeypatch.setattr(core, "STATE_TARGET_FILE_BYTES", max(1, nbytes))
-    # prev alone: one target's worth -> floor wins at floor >= 1..2
-    assert core.state_file_count(spark, p, 1) in (1, 2)
-    # a catch-up batch twice the state doubles the written size: the
-    # count must track prev + batch, not prev alone
-    got = core.state_file_count(spark, p, 1, extra_bytes=2 * nbytes)
-    assert got in (3, 4)  # ceil((nbytes + 2*nbytes)/target) with slack
-    # prev_bytes= skips the filesystem call entirely (missing path must
-    # not degrade the estimate when the caller tracked the size)
-    assert core.state_file_count(
-        spark, str(tmp_path / "never"), 1,
-        extra_bytes=2 * nbytes, prev_bytes=nbytes,
-    ) == got
-    # first write (no prev) is sized from the batch contribution alone
-    assert core.state_file_count(
-        spark, None, 1, extra_bytes=2 * nbytes
-    ) in (2, 3)
+    StateVersions prices each version once after writing it and sizes the
+    next write from prev + the batch's priced contribution, which bounds
+    the estimate from above, so the per-task write volume stays at the
+    target for ANY drain shape."""
+    sv = core.StateVersions(spark, "sfc_prev_batch", 1)
+    assert sv.read() is None
+    sv.write(_wide(spark), 0)  # no prev, no batch bytes: the floor
+    assert _parts(sv.path) == 1
+    nbytes = sv.bytes
+    assert nbytes == core._fs_bytes(spark, sv.path) > 0  # priced after the write
+    monkeypatch.setattr(core, "STATE_TARGET_FILE_BYTES", nbytes)
+    # a catch-up batch twice the state: prev + batch = 3 targets' worth
+    sv.write(_wide(spark), 1, batch_bytes=2 * nbytes)
+    assert sv.path.endswith("v1")
+    assert _parts(sv.path) == 3
+    assert sv.final().count() == 4000
     # fixture discipline unchanged: tiny prev + tiny batch -> floor
-    monkeypatch.setattr(
-        core, "STATE_TARGET_FILE_BYTES", 32 * 1024 * 1024
-    )
-    assert core.state_file_count(spark, p, 16, extra_bytes=1024) == 16
+    monkeypatch.setattr(core, "STATE_TARGET_FILE_BYTES", 32 * 1024 * 1024)
+    assert core.state_file_count(nbytes + 1024, 16) == 16
+
+
+def test_unpriced_version_keeps_the_batch_contribution(spark, monkeypatch):
+    """When pricing the version just written fails (``_fs_bytes`` returns
+    None), the next write is sized to max(floor, ceil(batch_bytes /
+    target)) from the batch alone — not dropped to the bare floor."""
+    monkeypatch.setattr(core, "_fs_bytes", lambda spark, path: None)
+    sv = core.StateVersions(spark, "sfc_unpriced", 2)
+    sv.write(_wide(spark), 0)
+    assert sv.bytes == 0
+    target = 1000
+    monkeypatch.setattr(core, "STATE_TARGET_FILE_BYTES", target)
+    batch_bytes = 5 * target
+    sv.write(_wide(spark), 1, batch_bytes=batch_bytes)
+    assert _parts(sv.path) == max(2, -(-batch_bytes // target)) == 5
 
 
 def test_batch_source_bytes_prices_each_micro_batch(spark, tmp_path):
