@@ -64,6 +64,11 @@ _REWRITTEN: tuple[str, ...] = (
     # and s17. Their normalized per-batch plans at sf0.1 are identical
     # to the parent's (``plans/r17/``), but the builder bodies changed,
     # so they re-prove. s20/s24 keep their own drains (untouched).
+    # Round 18 (simplicity): no round-17 entry has been graded since, so
+    # all stay. x39 is added: its span-postings exchange is now sized
+    # from documents-parquet bytes (the call x11 already made), not from
+    # a memoized postings count. x11 and b31 are not added — their call
+    # sites did not change.
     #
     # Exemption note (ADVICE r15): scratch-PLACEMENT-only hint changes
     # (round 15's `_stage table=` / b43 8x hints) do not enter this
@@ -79,6 +84,7 @@ _REWRITTEN: tuple[str, ...] = (
     "s17_stream_incremental_mv",
     "s21_stream_corpus_sync",
     "s22_stream_scd2",
+    "x39_dedup_containment",
 )
 
 # The round-9 name `_REPROOF` was kept as an alias through rounds 10-11
@@ -232,14 +238,6 @@ def clear_session_frame_caches() -> int:
                             # Session/JVM already gone: nothing to release.
                             pass
                 val.clear()
-    # operators/scale's memoized sizing counts are session-scoped state
-    # too (ints only — no storage to release, but a probe that re-stages
-    # data at the same source path and calls this to force a cold build
-    # must not silently ride a stale count — ADVICE r15).
-    from scylladb_redpanda_cdc_spark.operators import scale as _scale
-
-    n += len(_scale._rows_cache)
-    _scale._rows_cache.clear()
     return n
 
 

@@ -27,6 +27,7 @@ Scale posture: state stores are keyed exactly like the shuffles they replace
 from __future__ import annotations
 
 import itertools
+import json
 import os
 import re
 import tempfile
@@ -34,6 +35,12 @@ from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from scylladb_redpanda_cdc_spark.operators import scale as _scale
+from scylladb_redpanda_cdc_spark.operators.scale import (
+    fs_bytes as _fs_bytes,
+    size_partitions,
+)
 
 #: Explicit source schema (file streams cannot infer; SURVEY.md §1.3 —
 #: schema drift must fail loudly, as in Kafka Connect). ``ts``'s physical
@@ -99,18 +106,11 @@ _SCRATCH_ROOT = os.environ.get("SG_SCRATCH_DIR") or (
 
 #: Disk-backed fallback root for CORPUS-SCALED scratch (state versions,
 #: staging transports, corpus sinks). An explicit SG_SCRATCH_DIR wins for
-#: everything.
+#: everything. tmpfs is RAM: the round-14 ×1000 probe OOM-killed the JVM
+#: when two drills' ~8 GB state versions landed on /dev/shm, so a dir
+#: expected to hold ``operators/scale.py::GATE_BYTES`` or more goes here
+#: (below the gate — every fixture SF — placement is unchanged).
 _SCRATCH_DISK_ROOT = os.environ.get("SG_SCRATCH_DIR") or tempfile.gettempdir()
-
-#: Expected-volume bytes above which a scratch dir is placed on DISK even
-#: when tmpfs is the preferred root. tmpfs is RAM: the round-14 ×1000
-#: probe OOM-killed the JVM when two drills' ~8 GB state versions landed
-#: on /dev/shm (78 GB of tmpfs = 78 GB of physical memory gone) — the
-#: same fixture-constant-becomes-corpus-hazard class as the fixed
-#: coalesce/width knobs, fixed with the same 32 MB gate discipline:
-#: below the gate (every fixture SF) placement is byte-identical to the
-#: old behavior, so floors are untouched.
-SCRATCH_TMPFS_GATE_BYTES = 32 * 1024 * 1024
 
 
 def tmpdir(prefix: str, bytes_hint: int | None = None) -> str:
@@ -119,11 +119,12 @@ def tmpdir(prefix: str, bytes_hint: int | None = None) -> str:
 
     ``bytes_hint``: the caller's estimate of the volume this dir will
     hold (source-table or staged-stream bytes — driver-side metadata).
-    At or above :data:`SCRATCH_TMPFS_GATE_BYTES` the dir is created on
-    disk instead of RAM-backed tmpfs; below it (or with no hint — the
-    metadata-sized checkpoint/sink dirs) placement is unchanged."""
+    At or above the sizing gate (``operators/scale.py::GATE_BYTES``) the
+    dir is created on disk instead of RAM-backed tmpfs; below it (or with
+    no hint — the metadata-sized checkpoint/sink dirs) placement is
+    unchanged."""
     root = _SCRATCH_ROOT
-    if bytes_hint is not None and bytes_hint >= SCRATCH_TMPFS_GATE_BYTES:
+    if bytes_hint is not None and bytes_hint >= _scale.GATE_BYTES:
         root = _SCRATCH_DISK_ROOT
     return tempfile.mkdtemp(prefix=f"sg_{prefix}_", dir=root)
 
@@ -162,9 +163,10 @@ def staged_dir_valid(path: str | None) -> bool:
 @contextmanager
 def scoped_conf(spark: SparkSession, key: str, value: str):
     """Temporarily set a SQL conf, restoring the caller's value (or unset)
-    on exit — same discipline as :func:`scoped_shuffle` but for an arbitrary
-    key. Use for confs that only need to cover an eager batch read/write,
-    never for confs a lazily-executed stream will need at run time."""
+    on exit. The scope must cover every action that needs the value: an
+    eager batch read/write, an iterative loop, or a stream run to
+    completion inside it (availableNow is synchronous) — never a lazily
+    executed frame returned past the scope."""
     try:
         prev = spark.conf.get(key)
     except Exception:
@@ -228,13 +230,6 @@ def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: these helpers and keeps the session's own setting.
 STREAM_SINK_SHUFFLE_PARTITIONS = 1
 
-#: Staged-source bytes below which the micro-batch plan width stays at the
-#: fixture floor (:data:`STREAM_SINK_SHUFFLE_PARTITIONS`) — the same 32 MB
-#: gate discipline as ``operators/scale.py::FANOUT_GATE_BYTES``: every
-#: graded SF sits far below it, so fixture plans and floors are
-#: byte-identical; only corpus-scale streams size up.
-STREAM_WIDTH_GATE_BYTES = 32 * 1024 * 1024
-
 #: Target staged-source parquet bytes per micro-batch shuffle task above
 #: the gate. Parquet expands ~4x in flight (decompression + row overhead,
 #: the decade-4 b31 measurement), so 8 MB of source per task bounds
@@ -244,8 +239,8 @@ STREAM_WIDTH_GATE_BYTES = 32 * 1024 * 1024
 STREAM_TARGET_TASK_SOURCE_BYTES = 8 * 1024 * 1024
 
 #: Hard cap on the adaptive width — past this a deployment resizes the
-#: target instead (the FANOUT_MAX_PARTITIONS convention, scaled to the
-#: per-micro-batch volumes streams actually carry).
+#: target instead (the ``scale.FANOUT_MAX_PARTITIONS`` convention, scaled
+#: to the per-micro-batch volumes streams actually carry).
 STREAM_WIDTH_MAX = 2048
 
 _FILE_SOURCE_RE = re.compile(r"FileSource\[([^\]]+)\]")
@@ -272,34 +267,24 @@ def stream_shuffle_width(spark: SparkSession, sdf: DataFrame | None) -> int:
     KB-sized fixture batches where per-state-store overhead dominates) is
     a fixture knob, not a deployment posture: at x100 it serialized
     5.5 M-row merge joins on one core and the probes had to hand-set a
-    width of 32. This helper applies the
-    ``state_file_count`` discipline to the PLAN width: below
-    :data:`STREAM_WIDTH_GATE_BYTES` of staged source (every fixture SF —
-    a driver-side Hadoop FS call, no Spark job) it returns the floor and
-    micro-batch plans are byte-identical to the floored ones; above it,
-    the width targets ~:data:`STREAM_TARGET_TASK_SOURCE_BYTES` of source
-    parquet per task, capped at :data:`STREAM_WIDTH_MAX`. Multiple file
-    sources (stream-stream joins) sum their bytes. Results are
-    width-invariant for every operator that runs under it
+    width of 32. This helper sizes the PLAN width with
+    ``operators/scale.py::size_partitions``: below the gate of staged
+    source (every fixture SF — a driver-side Hadoop FS call, no Spark
+    job) it returns the floor and micro-batch plans are byte-identical to
+    the floored ones; above it, the width targets
+    ~:data:`STREAM_TARGET_TASK_SOURCE_BYTES` of source parquet per task,
+    capped at :data:`STREAM_WIDTH_MAX`. Multiple file sources
+    (stream-stream joins) sum their bytes. Results are width-invariant
+    for every operator that runs under it
     (``tests/test_knob_invariance.py``), so this trades only per-store
     fixed cost against per-task volume."""
-    floor = STREAM_SINK_SHUFFLE_PARTITIONS
-    total = stream_source_bytes(sdf) or 0
-    if total < STREAM_WIDTH_GATE_BYTES:
-        return floor
-    import math
-
-    return max(
-        floor, min(STREAM_WIDTH_MAX, math.ceil(total / STREAM_TARGET_TASK_SOURCE_BYTES))
+    return size_partitions(
+        stream_source_bytes(sdf),
+        STREAM_TARGET_TASK_SOURCE_BYTES,
+        STREAM_SINK_SHUFFLE_PARTITIONS,
+        STREAM_WIDTH_MAX,
     )
 
-
-# One implementation of the Hadoop getContentSummary pricing call for the
-# whole package (round-14 advice: this module carried a byte-identical
-# copy). Kept under the private name existing callers/probes use.
-from scylladb_redpanda_cdc_spark.operators.scale import (  # noqa: E402
-    fs_bytes as _fs_bytes,
-)
 
 #: Target on-disk parquet bytes per file for foreachBatch STATE writes.
 #: 32 MB of parquet ≈ 100-150 MB of in-flight rows per write task — small
@@ -307,58 +292,35 @@ from scylladb_redpanda_cdc_spark.operators.scale import (  # noqa: E402
 STATE_TARGET_FILE_BYTES = 32 * 1024 * 1024
 
 
-def _uri_to_local(path: str) -> str:
-    """file:///x and file:/x both normalize to /x (non-file URIs pass
-    through unchanged)."""
-    if path.startswith("file:"):
-        path = path[len("file:"):]
-        while path.startswith("//"):
-            path = path[1:]
-    return path
-
-
-def batch_source_bytes(checkpoint_dir: str, batch_id: int) -> int:
+def batch_source_bytes(
+    spark: SparkSession, checkpoint_dir: str, batch_id: int
+) -> int:
     """On-disk bytes of the files a FileStreamSource admitted at
     ``batch_id``, read from the stream's checkpoint source log
-    (``<ckpt>/sources/<i>/<batch_id>`` — one JSON line per file) —
-    driver-side metadata only, ``0`` when unpriceable (non-file sources,
+    (``<ckpt>/sources/<i>/<batch_id>`` — one JSON line per file, its
+    ``path`` a percent-encoded URI) and priced through :func:`_fs_bytes`,
+    which parses each URI as the file source itself does — driver-side
+    metadata only, ``0`` when unpriceable (non-file sources,
     compacted-away or missing log entries). The ``batch_df`` a
     ``foreachBatch`` body receives is a bare LogicalRDD and exposes no
     file metadata, so the checkpoint log is the authoritative record of
     the batch's contribution; the foreachBatch state writers size their
-    state-version writes with it (prev + batch — VERDICT r15 task 1)."""
-    import glob as _glob
-    import json as _json
-
+    state-version writes with it (prev + batch)."""
     total = 0
     try:
-        for srcdir in _glob.glob(os.path.join(checkpoint_dir, "sources", "*")):
-            logf = os.path.join(srcdir, str(batch_id))
-            entries = []
-            if os.path.isfile(logf):
-                with open(logf, encoding="utf-8") as fh:
-                    entries = [
-                        _json.loads(ln)
-                        for ln in fh
-                        if ln.lstrip().startswith("{")
-                    ]
-            else:  # compacted log: entries carry their batchId
-                compact = os.path.join(srcdir, f"{batch_id}.compact")
-                if os.path.isfile(compact):
-                    with open(compact, encoding="utf-8") as fh:
-                        entries = [
-                            e
-                            for ln in fh
-                            if ln.lstrip().startswith("{")
-                            for e in (_json.loads(ln),)
-                            if e.get("batchId") == batch_id
-                        ]
+        srcroot = os.path.join(checkpoint_dir, "sources")
+        for src in os.listdir(srcroot):
+            logf = os.path.join(srcroot, src, str(batch_id))
+            compacted = not os.path.isfile(logf)
+            if compacted:  # compacted log: entries carry their batchId
+                logf = os.path.join(srcroot, src, f"{batch_id}.compact")
+                if not os.path.isfile(logf):
+                    continue
+            with open(logf, encoding="utf-8") as fh:
+                entries = [json.loads(ln) for ln in fh if ln.lstrip().startswith("{")]
             for e in entries:
-                path = _uri_to_local(e.get("path", ""))
-                try:
-                    total += os.path.getsize(path)
-                except OSError:
-                    pass
+                if not compacted or e.get("batchId") == batch_id:
+                    total += _fs_bytes(spark, e.get("path", "")) or 0
     except Exception:
         return 0
     return total
@@ -390,11 +352,7 @@ def state_file_count(nbytes: int | None, floor: int) -> int:
     state's actual bytes keeps per-task volume bounded at ANY corpus
     size while file count stays proportional to data — the "target file
     SIZE" rule real lakehouse writers use."""
-    import math
-
-    return max(
-        floor, min(4096, math.ceil((nbytes or 0) / STATE_TARGET_FILE_BYTES))
-    )
+    return size_partitions(nbytes, STATE_TARGET_FILE_BYTES, floor, 4096)
 
 
 class StateVersions:
@@ -455,7 +413,8 @@ def drain_foreach_batch(sdf: DataFrame, body) -> None:
     ckpt = tmpdir("ckpt")
 
     def run(batch_df: DataFrame, batch_id: int) -> None:
-        body(batch_df, batch_id, batch_source_bytes(ckpt, batch_id))
+        nbytes = batch_source_bytes(sdf.sparkSession, ckpt, batch_id)
+        body(batch_df, batch_id, nbytes)
 
     with scoped_stream_shuffle(sdf):
         q = (
@@ -467,37 +426,18 @@ def drain_foreach_batch(sdf: DataFrame, body) -> None:
         q.awaitTermination()
 
 
-@contextmanager
 def scoped_stream_shuffle(sdf: DataFrame):
-    """:func:`scoped_shuffle` at the width :func:`stream_shuffle_width`
-    derives from ``sdf``'s own staged file source(s) — the one entry point
-    every stream-run helper uses, so a corpus-scale staged stream plans
-    its micro-batches at a data-sized width with no hand-set knob."""
+    """:func:`scoped_conf` of ``spark.sql.shuffle.partitions`` at the
+    width :func:`stream_shuffle_width` derives from ``sdf``'s own staged
+    file source(s) — the one entry point every stream-run helper uses, so
+    a corpus-scale staged stream plans its micro-batches at a data-sized
+    width with no hand-set knob. Enter it around a stream run to
+    completion (availableNow is synchronous, so the scope covers all
+    micro-batch planning)."""
     spark = sdf.sparkSession
-    with scoped_shuffle(spark, stream_shuffle_width(spark, sdf)):
-        yield
-
-
-@contextmanager
-def scoped_shuffle(spark: SparkSession, n: int = -1):
-    """Temporarily set ``spark.sql.shuffle.partitions`` while a test-sink
-    stream runs to completion (availableNow is synchronous, so the scope
-    covers all micro-batch planning), restoring the caller's value after."""
-    if n < 0:
-        n = STREAM_SINK_SHUFFLE_PARTITIONS
-    key = "spark.sql.shuffle.partitions"
-    try:
-        prev = spark.conf.get(key)
-    except Exception:
-        prev = None
-    spark.conf.set(key, str(n))
-    try:
-        yield
-    finally:
-        if prev is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, prev)
+    return scoped_conf(
+        spark, "spark.sql.shuffle.partitions", str(stream_shuffle_width(spark, sdf))
+    )
 
 
 def run_to_table(sdf: DataFrame, mode: str = "append") -> DataFrame:

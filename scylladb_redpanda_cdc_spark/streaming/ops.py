@@ -27,6 +27,7 @@ from collections.abc import Iterator
 from pyspark.sql import DataFrame, SparkSession
 
 from scylladb_redpanda_cdc_spark.operators.cdc import materialize_latest
+from scylladb_redpanda_cdc_spark.operators.scale import size_partitions
 from scylladb_redpanda_cdc_spark.sources.changelog import synth_changelog
 from scylladb_redpanda_cdc_spark.streaming.core import (
     StateVersions,
@@ -76,25 +77,12 @@ def _changelog_files_per_batch(spark: SparkSession, sf_dir: str, n_files: int) -
     (``state_file_count``'s docstring). Deterministic per (dataset,
     n_files): driver-side metadata only, so the reader can recompute the
     trigger cap without the stager threading it through the cache."""
-    from scylladb_redpanda_cdc_spark.streaming.core import (
-        STREAM_WIDTH_GATE_BYTES,
-    )
-
-    src_bytes = table_bytes(spark, sf_dir, "orders") or 0
-    if src_bytes < STREAM_WIDTH_GATE_BYTES:
-        return 1
-    import math
-
-    return max(
+    return size_partitions(
+        table_bytes(spark, sf_dir, "orders"),
+        n_files * STAGE_WRITE_TARGET_TASK_BYTES,
         1,
-        min(
-            256,
-            math.ceil(
-                src_bytes
-                * CHANGELOG_INFLIGHT_MULTIPLIER
-                / (n_files * STAGE_WRITE_TARGET_TASK_BYTES)
-            ),
-        ),
+        256,
+        expansion=CHANGELOG_INFLIGHT_MULTIPLIER,
     )
 
 

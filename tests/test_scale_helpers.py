@@ -1,18 +1,23 @@
-"""operators/scale.py — data-adaptive fan-out sizing (round 13).
+"""operators/scale.py — the one bytes→count sizing rule and its callers.
 
-Pins the three contracts the x11/x39 scale guard rests on:
+Pins the contracts every data-adaptive width rests on:
 
-1. The parquet-size GATE: at every fixture SF the helper returns None
-   without running a Spark job, so the floored plans are byte-identical.
-2. The sizing formula above the gate: count-based, targets
-   FANOUT_TARGET_PARTITION_BYTES per task, floored by the session
-   shuffle-partition count, capped at FANOUT_MAX_PARTITIONS.
-3. Semantics under the guard: forcing the adaptive path at fixture scale
-   changes x11's RESULT not at all (same pairs, same jaccard values).
+1. One rule: ``size_partitions`` returns the same width as each of the
+   four hand-written formulas it replaced (fan-out exchange, stream plan
+   width, state-version file count, changelog files per batch) — gate,
+   floor, cap and exact ceiling boundaries included.
+2. The fan-out exchange width (``fanout_partitions_by_bytes``): no Spark
+   job and ``None`` below the gate, the bytes formula above it, the
+   session floor and the hard cap.
+3. One pricing call: ``fs_bytes`` prices plain paths and the
+   percent-encoded URIs a file source logs.
+4. Semantics under the guard: forcing the adaptive path at fixture scale
+   changes x11's, x39's and b31's RESULTS not at all.
 """
 
 from __future__ import annotations
 
+import math
 import os
 
 import pytest
@@ -31,149 +36,223 @@ def test_fs_bytes_none_on_missing_path(spark):
     assert scale.fs_bytes(spark, "/root/testdata/nope/does-not-exist") is None
 
 
+def test_fs_bytes_reads_file_uris(spark, tmp_path):
+    """A ``file:///…`` URI string prices the file it names, including a
+    percent-encoded one (a space logged as ``%20`` — the form a file
+    source's checkpoint log records)."""
+    d = tmp_path / "with space"
+    d.mkdir()
+    f = d / "part.bin"
+    f.write_bytes(b"x" * 1234)
+    uri = f.as_uri()
+    assert "%20" in uri and uri.startswith("file:///")
+    assert scale.fs_bytes(spark, uri) == 1234
+    assert scale.fs_bytes(spark, str(f)) == 1234
+    assert scale.fs_bytes(spark, f"file://{f}") == 1234  # unencoded: plain path
+
+
 def test_gate_short_circuits_at_fixture_scale(spark, sf_dir):
-    """Fixture documents.parquet is far below the 32 MB gate: None, and
-    the postings argument is never touched (passing a poison object in
-    place of a DataFrame proves no count job can have run)."""
-
-    class Poison:
-        def count(self):  # pragma: no cover - the assertion IS non-use
-            raise AssertionError("gate must short-circuit before count()")
-
-    out = scale.fanout_partitions(
-        spark, os.path.join(sf_dir, "documents.parquet"), Poison(), row_bytes=56
-    )
-    assert out is None
+    """Fixture documents.parquet is far below the 32 MB gate: None at any
+    multiplier, and no Spark job runs (pricing is driver-side metadata
+    only — the status tracker sees no new job)."""
+    path = os.path.join(sf_dir, "documents.parquet")
+    assert os.path.getsize(path) < scale.GATE_BYTES
+    tracker = spark.sparkContext.statusTracker()
+    group = "scale-gate-probe"
+    spark.sparkContext.setJobGroup(group, "gate probe")
+    try:
+        for mult in (1, 56, 1e9):
+            for sides in (1, 2):
+                assert (
+                    scale.fanout_partitions_by_bytes(
+                        spark, path, bytes_multiplier=mult, sides=sides
+                    )
+                    is None
+                )
+        assert tracker.getJobIdsForGroup(group) == []
+    finally:
+        spark.sparkContext.setLocalProperty("spark.jobGroup.id", None)
+    # The rule itself: below the gate every caller gets its floor back.
+    assert scale.size_partitions(os.path.getsize(path), 1, 7, 10**6, 1e9) == 7
+    assert scale.size_partitions(None, 1, 7, 10**6) == 7
 
 
 def test_sizing_formula_above_gate(spark, sf_dir, monkeypatch):
-    monkeypatch.setattr(scale, "FANOUT_GATE_BYTES", 0)
+    """Gate open: ceil(bytes × multiplier × sides / target), returned
+    only when it beats the session's shuffle-partition count."""
+    monkeypatch.setattr(scale, "GATE_BYTES", 0)
     monkeypatch.setattr(scale, "FANOUT_TARGET_PARTITION_BYTES", 1000)
-    rows = spark.range(500).persist()  # 500 rows * 56 B / 1000 B -> 28
-    try:
-        sess = int(spark.conf.get("spark.sql.shuffle.partitions"))
-        n = scale.fanout_partitions(
-            spark, os.path.join(sf_dir, "documents.parquet"), rows, row_bytes=56
+    path = os.path.join(sf_dir, "documents.parquet")
+    nbytes = os.path.getsize(path)
+    sess = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    for mult, sides in ((1, 1), (3, 1), (3, 2)):
+        expected = -(-nbytes * mult * sides // 1000)  # ceil
+        got = scale.fanout_partitions_by_bytes(
+            spark, path, bytes_multiplier=mult, sides=sides
         )
-        expected = -(-500 * 56 // 1000)  # ceil
-        assert n == (expected if expected > sess else None)
-        # Make the target small enough that n must beat any session setting.
-        monkeypatch.setattr(scale, "FANOUT_TARGET_PARTITION_BYTES", 56)
-        assert scale.fanout_partitions(
-            spark, os.path.join(sf_dir, "documents.parquet"), rows, row_bytes=56
-        ) == 500
-    finally:
-        rows.unpersist()
+        assert got == (expected if expected > sess else None), (mult, sides)
+    # Make the target small enough that n must beat any session setting.
+    monkeypatch.setattr(scale, "FANOUT_TARGET_PARTITION_BYTES", 56)
+    assert scale.fanout_partitions_by_bytes(
+        spark, path, bytes_multiplier=56
+    ) == nbytes
 
 
 def test_session_floor_and_hard_cap(spark, sf_dir, monkeypatch):
-    monkeypatch.setattr(scale, "FANOUT_GATE_BYTES", 0)
-    rows = spark.range(10).persist()
-    try:
-        # Tiny postings at the default 64 MB target: session default wins.
-        assert (
-            scale.fanout_partitions(
-                spark, os.path.join(sf_dir, "documents.parquet"), rows, row_bytes=56
-            )
-            is None
-        )
-        monkeypatch.setattr(scale, "FANOUT_TARGET_PARTITION_BYTES", 1)
-        monkeypatch.setattr(scale, "FANOUT_MAX_PARTITIONS", 64)
-        assert (
-            scale.fanout_partitions(
-                spark, os.path.join(sf_dir, "documents.parquet"), rows, row_bytes=56
-            )
-            == 64
-        )
-    finally:
-        rows.unpersist()
-
-
-def test_unmaterialized_postings_rejected_above_gate(spark, sf_dir, monkeypatch):
-    """The sizing count must never replay corpus-sized lineage: above the
-    gate, a frame that is neither persisted nor checkpointed is a caller
-    bug and raises ``RuntimeError`` (not ``assert`` — the contract must
-    survive ``python -O``; round-14 advice); the same frame sails through
-    with a pre-counted rows= (no count job, frame untouched)."""
-    monkeypatch.setattr(scale, "FANOUT_GATE_BYTES", 0)
-    monkeypatch.setattr(scale, "FANOUT_TARGET_PARTITION_BYTES", 56)
-    raw = spark.range(500).selectExpr("id * 2 AS id")  # real lineage, unpersisted
+    """Tiny priced bytes at the default 64 MB target leave the session
+    default in charge (None); a 1-byte target is clamped to
+    FANOUT_MAX_PARTITIONS."""
+    monkeypatch.setattr(scale, "GATE_BYTES", 0)
     path = os.path.join(sf_dir, "documents.parquet")
-    with pytest.raises(RuntimeError, match="persisted or"):
-        scale.fanout_partitions(spark, path, raw, row_bytes=56)
-    # rows= bypasses both the contract check and the count.
-    assert scale.fanout_partitions(spark, path, raw, row_bytes=56, rows=500) == 500
-    # a localCheckpoint'ed frame satisfies the contract too (x39's path).
-    ck = spark.range(500).selectExpr("id * 2 AS id").localCheckpoint(eager=True)
-    assert scale.fanout_partitions(spark, path, ck, row_bytes=56) == 500
+    assert scale.fanout_partitions_by_bytes(spark, path, bytes_multiplier=1) is None
+    monkeypatch.setattr(scale, "FANOUT_TARGET_PARTITION_BYTES", 1)
+    monkeypatch.setattr(scale, "FANOUT_MAX_PARTITIONS", 64)
+    sess = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    got = scale.fanout_partitions_by_bytes(spark, path, bytes_multiplier=1)
+    assert got == (64 if 64 > sess else None)
+    # The rule: floor wins over a smaller ceil, cap wins over a larger one.
+    assert scale.size_partitions(10, 1000, 5, 64) == 5
+    assert scale.size_partitions(10**6, 1, 5, 64) == 64
 
 
-def test_bare_relation_refused_above_gate(spark, sf_dir, monkeypatch):
-    """Round 16 (VERDICT r15 task 7): an un-persisted bare source scan is
-    REFUSED, not admitted-with-a-warning — counting it re-scans the
-    relation, exactly what the contract exists to prevent. Storage level
-    or checkpoint evidence (LogicalRDD) are the only admit paths now."""
-    monkeypatch.setattr(scale, "FANOUT_GATE_BYTES", 0)
-    path = os.path.join(sf_dir, "documents.parquet")
-    bare = spark.read.parquet(path)  # bare relation, no storage level
-    assert not scale._is_materialized(bare)
-    with pytest.raises(RuntimeError, match="persisted or"):
-        scale.fanout_partitions(spark, path, bare, row_bytes=56)
-    # persisting the same frame flips the verdict (and rows= still
-    # bypasses the contract entirely)
-    bare2 = spark.read.parquet(path).persist()
-    try:
-        assert scale._is_materialized(bare2)
-    finally:
-        bare2.unpersist()
-    assert scale.fanout_partitions(spark, path, bare, row_bytes=56, rows=10**9)
+class _FakeConf:
+    def __init__(self, value):
+        self._v = value
+
+    def get(self, key, default=None):
+        return self._v if self._v is not None else default
 
 
-def test_count_key_memoizes_the_priced_count(spark, sf_dir, monkeypatch):
-    """count_key= prices the postings count ONCE per (session, source,
-    kernel): the second call must return the same width without touching
-    the frame at all (a poison count proves no job ran), and a DIFFERENT
-    count_key over the same source re-counts (distinct kernels must not
-    collide) — round 15, VERDICT r14 task 1."""
-    monkeypatch.setattr(scale, "FANOUT_GATE_BYTES", 0)
-    monkeypatch.setattr(scale, "FANOUT_TARGET_PARTITION_BYTES", 56)
-    path = os.path.join(sf_dir, "documents.parquet")
-    counted = spark.range(500).persist()
+class _FakeSpark:
+    """Just enough session for the sizing helpers: a
+    ``spark.sql.shuffle.partitions`` value (``None``: unset) and nothing
+    else — with pricing patched, no JVM call can happen."""
 
-    class Poison:
-        storageLevel = property(lambda self: (_ for _ in ()).throw(ValueError))
+    def __init__(self, value):
+        self.conf = _FakeConf(value)
 
-        def count(self):  # pragma: no cover - non-use IS the assertion
-            raise AssertionError("memo hit must not count()")
 
-    try:
-        first = scale.fanout_partitions(
-            spark, path, counted, row_bytes=56, count_key="t_memo"
-        )
-        assert first == 500
-        assert scale.fanout_partitions(
-            spark, path, Poison(), row_bytes=56, count_key="t_memo"
-        ) == 500
-        # same memoized count, different formula params -> fresh width
-        assert scale.fanout_partitions(
-            spark, path, Poison(), row_bytes=112, count_key="t_memo"
-        ) == 1000
-        # a different kernel tag re-counts: the memo MISS reaches
-        # Poison.count() (its storageLevel raising inside
-        # _is_materialized's try admits the frame), so the specific
-        # poison AssertionError proves the count was attempted — not the
-        # materialization contract's RuntimeError (ADVICE r15: the broad
-        # Exception masked which guard fired)
-        with pytest.raises(AssertionError, match="memo hit must not count"):
-            scale.fanout_partitions(
-                spark, path, Poison(), row_bytes=56, count_key="t_memo_other"
+#: The four formulas the sizing helpers used before ``size_partitions``,
+#: copied verbatim (constants passed in, the multiply-before-divide order
+#: kept) as the reference the one rule must reproduce.
+def _ref_fanout_by_bytes(nbytes, mult, sides, sess, gate, target, cap):
+    if nbytes is None or nbytes < gate:
+        return None
+    n = min(cap, math.ceil(nbytes * mult * sides / target))
+    return n if n > sess else None
+
+
+def _ref_stream_width(total, floor, gate, target, cap):
+    total = total or 0
+    if total < gate:
+        return floor
+    return max(floor, min(cap, math.ceil(total / target)))
+
+
+def _ref_state_file_count(nbytes, floor, target):
+    return max(floor, min(4096, math.ceil((nbytes or 0) / target)))
+
+
+def _ref_changelog_files_per_batch(src_bytes, n_files, gate, mult, target):
+    src_bytes = src_bytes or 0
+    if src_bytes < gate:
+        return 1
+    return max(1, min(256, math.ceil(src_bytes * mult / (n_files * target))))
+
+
+def test_size_partitions_reproduces_the_four_formulas(monkeypatch):
+    """Every width the four sizing helpers return is the width its own
+    hand-written formula returned before the merge, on a grid of byte
+    counts around the gate (gate-1, gate, gate+1) and around each
+    formula's exact ceiling boundaries (k·target-1, k·target,
+    k·target+1), plus unpriced, huge (cap-bound) inputs and
+    ``test_bytes_variant_gate_formula_and_floor``'s patched case (gate 0,
+    target = nbytes, multiplier 4·sess)."""
+    from scylladb_redpanda_cdc_spark.streaming import core, ops
+
+    mib = 1024 * 1024
+    gate = scale.GATE_BYTES
+    assert gate == 32 * mib
+
+    def around(*centres):
+        return {c + d for c in centres for d in (-1, 0, 1) if c + d >= 0}
+
+    ks = (1, 2, 3, 7, 64, 1000)
+    grid = around(0, gate, 10**15) | {None}
+    for t in (
+        scale.FANOUT_TARGET_PARTITION_BYTES,
+        core.STREAM_TARGET_TASK_SOURCE_BYTES,
+        core.STATE_TARGET_FILE_BYTES,
+        ops.STAGE_WRITE_TARGET_TASK_BYTES,
+    ):
+        grid |= around(*(k * t for k in ks))
+    fan_t = scale.FANOUT_TARGET_PARTITION_BYTES
+    for mult in (1.5, 2, 4, 32):
+        for sides in (1, 2):
+            grid |= around(*(int(k * fan_t // (mult * sides)) for k in ks))
+    for n_files in (1, 3, 4, 8):
+        grid |= around(
+            *(
+                k * n_files * ops.STAGE_WRITE_TARGET_TASK_BYTES
+                // ops.CHANGELOG_INFLIGHT_MULTIPLIER
+                for k in ks
             )
-        # no count_key -> no memo read (the count is attempted again)
-        with pytest.raises(AssertionError, match="memo hit must not count"):
-            scale.fanout_partitions(spark, path, Poison(), row_bytes=56)
-    finally:
-        counted.unpersist()
-        scale._rows_cache.clear()
+        )
+    grid = sorted(grid, key=lambda b: -1 if b is None else b)
+
+    priced = {}
+    monkeypatch.setattr(scale, "fs_bytes", lambda _spark, _path: priced["n"])
+    monkeypatch.setattr(core, "stream_source_bytes", lambda _sdf: priced["n"])
+    monkeypatch.setattr(ops, "table_bytes", lambda _s, _d, _t: priced["n"])
+
+    def check_fanout(nbytes, gate, target, mults, sesses):
+        for sess in sesses:
+            for mult in mults:
+                for sides in (1, 2):
+                    got = scale.fanout_partitions_by_bytes(
+                        _FakeSpark(sess), "src", bytes_multiplier=mult, sides=sides
+                    )
+                    want = _ref_fanout_by_bytes(
+                        nbytes, mult, sides, sess, gate, target,
+                        scale.FANOUT_MAX_PARTITIONS,
+                    )
+                    assert got == want, (nbytes, mult, sides, sess)
+
+    for nbytes in grid:
+        priced["n"] = nbytes
+        check_fanout(
+            nbytes, gate, scale.FANOUT_TARGET_PARTITION_BYTES,
+            (1.5, 2, 4, 32), (1, 32, 200),
+        )
+        assert core.stream_shuffle_width(None, None) == _ref_stream_width(
+            nbytes,
+            core.STREAM_SINK_SHUFFLE_PARTITIONS,
+            gate,
+            core.STREAM_TARGET_TASK_SOURCE_BYTES,
+            core.STREAM_WIDTH_MAX,
+        ), nbytes
+        for floor in (1, 2, 4, 16):
+            assert core.state_file_count(nbytes, floor) == _ref_state_file_count(
+                nbytes, floor, core.STATE_TARGET_FILE_BYTES
+            ), (nbytes, floor)
+        for n_files in (1, 3, 4, 8):
+            assert ops._changelog_files_per_batch(
+                None, "sf", n_files
+            ) == _ref_changelog_files_per_batch(
+                nbytes, n_files, gate, ops.CHANGELOG_INFLIGHT_MULTIPLIER,
+                ops.STAGE_WRITE_TARGET_TASK_BYTES,
+            ), (nbytes, n_files)
+
+    # the patched fan-out case: gate open, target = the priced bytes
+    monkeypatch.setattr(scale, "GATE_BYTES", 0)
+    for nbytes in (117248, 65515, 1, 10**9 + 7):
+        priced["n"] = nbytes
+        monkeypatch.setattr(scale, "FANOUT_TARGET_PARTITION_BYTES", nbytes)
+        for sess in (1, 32, 200):
+            check_fanout(nbytes, 0, nbytes, (sess, 4 * sess, 4 * sess + 0.5), (sess,))
+            assert scale.fanout_partitions_by_bytes(
+                _FakeSpark(sess), "src", bytes_multiplier=4 * sess
+            ) == 4 * sess
 
 
 def test_session_conf_read_defensive():
@@ -181,21 +260,9 @@ def test_session_conf_read_defensive():
     (e.g. "auto" — open-source Spark validates the set, managed platforms
     do not) must not turn the guard into a builder crash: the helper
     falls back to Spark's own 200 default."""
-
-    class FakeConf:
-        def __init__(self, value):
-            self._v = value
-
-        def get(self, key, default=None):
-            return self._v if self._v is not None else default
-
-    class FakeSpark:
-        def __init__(self, value):
-            self.conf = FakeConf(value)
-
-    assert scale._session_shuffle_partitions(FakeSpark("auto")) == 200
-    assert scale._session_shuffle_partitions(FakeSpark(None)) == 200
-    assert scale._session_shuffle_partitions(FakeSpark("64")) == 64
+    assert scale._session_shuffle_partitions(_FakeSpark("auto")) == 200
+    assert scale._session_shuffle_partitions(_FakeSpark(None)) == 200
+    assert scale._session_shuffle_partitions(_FakeSpark("64")) == 64
 
 
 def test_bytes_variant_gate_formula_and_floor(spark, sf_dir, monkeypatch):
@@ -205,7 +272,7 @@ def test_bytes_variant_gate_formula_and_floor(spark, sf_dir, monkeypatch):
         scale.fanout_partitions_by_bytes(spark, path, bytes_multiplier=1e9)
         is None
     )
-    monkeypatch.setattr(scale, "FANOUT_GATE_BYTES", 0)
+    monkeypatch.setattr(scale, "GATE_BYTES", 0)
     nbytes = os.path.getsize(path)
     sess = int(spark.conf.get("spark.sql.shuffle.partitions"))
     # Multiplier sized so n = 4 * sess: must return exactly that.
@@ -238,7 +305,7 @@ def test_b31_result_invariant_under_forced_adaptive_path(
         )
 
     baseline = agg()
-    monkeypatch.setattr(scale, "FANOUT_GATE_BYTES", 0)
+    monkeypatch.setattr(scale, "GATE_BYTES", 0)
     monkeypatch.setattr(scale, "BROADCAST_INFEASIBLE_BYTES", 0)
     monkeypatch.setattr(scale, "FANOUT_TARGET_PARTITION_BYTES", 1024)
     forced = agg()
@@ -249,40 +316,55 @@ def test_b31_result_invariant_under_forced_adaptive_path(
 def test_x11_result_invariant_under_forced_adaptive_path(
     spark, sf_dir, monkeypatch
 ):
-    """Force the gate open at sf0.001 so x11 takes the repartitioned
-    plan, and compare the full (doc_a, doc_b, jaccard) set against the
+    """Force the gate open at sf0.001 so x11 and x39 take their
+    repartitioned plans, and compare each full result set against the
     default plan: the guard must be a physical-layout change only."""
+    import io
+    from contextlib import redirect_stdout
+
     from scylladb_redpanda_cdc_spark.plans import llm_queries
 
-    def pairs():
+    def x11_rows():
         df = llm_queries.x11_dedup_ngram_jaccard(spark, sf_dir)
         return {
             (r["doc_a"], r["doc_b"], round(r["jaccard"], 12))
             for r in df.collect()
         }
 
-    clear_session_frame_caches()
-    baseline = pairs()
+    def x39_rows():
+        df = llm_queries.x39_dedup_containment(spark, sf_dir)
+        return {
+            (r["doc_a"], r["doc_b"], r["n_shared_spans"], r["n_spans_a"],
+             round(r["containment"], 12))
+            for r in df.collect()
+        }
 
-    clear_session_frame_caches()
-    monkeypatch.setattr(scale, "FANOUT_GATE_BYTES", 0)
-    # Target one posting row per partition-byte bucket: guarantees the
-    # adaptive count beats the session setting even on tiny fixtures.
-    monkeypatch.setattr(scale, "FANOUT_TARGET_PARTITION_BYTES", 4096)
-    monkeypatch.setattr(scale, "FANOUT_MAX_PARTITIONS", 96)
-    forced = pairs()
-
-    # The mechanism, not just the result: the forced plan carries the
-    # guard's numbered repartition on the join key (REPARTITION_BY_NUM
-    # survives AQE), which the fixture-scale default plan must not.
-    import io
-    from contextlib import redirect_stdout
-
-    buf = io.StringIO()
-    with redirect_stdout(buf):
+    def x11_plan():
         llm_queries._x11_cache.clear()  # bypass cache, keep blocks alive
         llm_queries.x11_dedup_ngram_jaccard(spark, sf_dir).explain(True)
-    clear_session_frame_caches()
-    assert "REPARTITION_BY_NUM" in buf.getvalue()
 
-    assert forced == baseline and len(baseline) > 0
+    def x39_plan():
+        llm_queries.x39_dedup_containment(spark, sf_dir).explain(True)
+
+    for rows, plan in ((x11_rows, x11_plan), (x39_rows, x39_plan)):
+        clear_session_frame_caches()
+        baseline = rows()
+
+        clear_session_frame_caches()
+        with monkeypatch.context() as m:
+            m.setattr(scale, "GATE_BYTES", 0)
+            # A small per-task target guarantees the adaptive count beats
+            # the session setting even on tiny fixtures.
+            m.setattr(scale, "FANOUT_TARGET_PARTITION_BYTES", 4096)
+            m.setattr(scale, "FANOUT_MAX_PARTITIONS", 96)
+            forced = rows()
+
+            # The mechanism, not just the result: the forced plan carries
+            # the guard's numbered repartition on the join key
+            # (REPARTITION_BY_NUM survives AQE).
+            buf = io.StringIO()
+            with redirect_stdout(buf):
+                plan()
+        clear_session_frame_caches()
+        assert "REPARTITION_BY_NUM" in buf.getvalue(), rows.__name__
+        assert forced == baseline and len(baseline) > 0, rows.__name__

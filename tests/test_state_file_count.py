@@ -18,6 +18,7 @@ import os
 
 from pyspark.sql import functions as F
 
+from scylladb_redpanda_cdc_spark.operators import scale
 from scylladb_redpanda_cdc_spark.streaming import core
 
 
@@ -56,6 +57,7 @@ def test_count_scales_with_state_bytes(spark, tmp_path, monkeypatch):
     ).write.parquet(p)
     nbytes = core._fs_bytes(spark, p)
     assert nbytes > 0
+    monkeypatch.setattr(scale, "GATE_BYTES", 0)
     monkeypatch.setattr(core, "STATE_TARGET_FILE_BYTES", max(1, nbytes // 3))
     got = core.state_file_count(nbytes, 1)
     assert 3 <= got <= 5  # ceil(n / (n//3)) with rounding slack
@@ -64,6 +66,7 @@ def test_count_scales_with_state_bytes(spark, tmp_path, monkeypatch):
 
 
 def test_count_is_capped_at_4096(monkeypatch):
+    monkeypatch.setattr(scale, "GATE_BYTES", 0)
     monkeypatch.setattr(core, "STATE_TARGET_FILE_BYTES", 1)
     assert core.state_file_count(10_000, 4) == 4096
 
@@ -92,6 +95,7 @@ def test_write_sized_from_prev_plus_batch_contribution(
     assert _parts(sv.path) == 1
     nbytes = sv.bytes
     assert nbytes == core._fs_bytes(spark, sv.path) > 0  # priced after the write
+    monkeypatch.setattr(scale, "GATE_BYTES", 0)
     monkeypatch.setattr(core, "STATE_TARGET_FILE_BYTES", nbytes)
     # a catch-up batch twice the state: prev + batch = 3 targets' worth
     sv.write(_wide(spark), 1, batch_bytes=2 * nbytes)
@@ -99,6 +103,7 @@ def test_write_sized_from_prev_plus_batch_contribution(
     assert _parts(sv.path) == 3
     assert sv.final().count() == 4000
     # fixture discipline unchanged: tiny prev + tiny batch -> floor
+    monkeypatch.setattr(scale, "GATE_BYTES", 32 * 1024 * 1024)
     monkeypatch.setattr(core, "STATE_TARGET_FILE_BYTES", 32 * 1024 * 1024)
     assert core.state_file_count(nbytes + 1024, 16) == 16
 
@@ -112,6 +117,7 @@ def test_unpriced_version_keeps_the_batch_contribution(spark, monkeypatch):
     sv.write(_wide(spark), 0)
     assert sv.bytes == 0
     target = 1000
+    monkeypatch.setattr(scale, "GATE_BYTES", 0)
     monkeypatch.setattr(core, "STATE_TARGET_FILE_BYTES", target)
     batch_bytes = 5 * target
     sv.write(_wide(spark), 1, batch_bytes=batch_bytes)
@@ -147,7 +153,7 @@ def test_batch_source_bytes_prices_each_micro_batch(spark, tmp_path):
     seen: list[tuple[int, int]] = []
 
     def body(batch_df, bid):
-        seen.append((bid, core.batch_source_bytes(ckpt, bid)))
+        seen.append((bid, core.batch_source_bytes(spark, ckpt, bid)))
 
     sdf = (
         spark.readStream.schema("id bigint, v bigint")
@@ -164,5 +170,38 @@ def test_batch_source_bytes_prices_each_micro_batch(spark, tmp_path):
     assert [b for b, _ in sorted(seen)] == [0, 1, 2]
     assert [n for _, n in sorted(seen)] == per_file
     # unpriceable inputs degrade to 0, never raise
-    assert core.batch_source_bytes(ckpt, 99) == 0
-    assert core.batch_source_bytes(str(tmp_path / "nope"), 0) == 0
+    assert core.batch_source_bytes(spark, ckpt, 99) == 0
+    assert core.batch_source_bytes(spark, str(tmp_path / "nope"), 0) == 0
+
+
+def test_drain_prices_percent_encoded_source_uris(spark, tmp_path):
+    """The checkpoint source log records each admitted file as a
+    percent-encoded URI; a source dir whose name holds a space logs it as
+    ``%20``. ``drain_foreach_batch`` must still hand every batch its
+    file's real size (read as a local path, ``%20`` names no file, and the
+    batch was priced at 0)."""
+    import shutil
+    import time
+
+    src = tmp_path / "staged with space"
+    src.mkdir()
+    sizes: list[int] = []
+    for i in range(2):
+        scratch = str(tmp_path / f"scratch{i}")
+        spark.range(50 * (i + 1)).coalesce(1).write.parquet(scratch)
+        (part,) = [f for f in os.listdir(scratch) if f.endswith(".parquet")]
+        dst = str(src / f"{i:02d}.parquet")
+        shutil.move(os.path.join(scratch, part), dst)
+        mtime = time.time() - 300 + i * 100
+        os.utime(dst, (mtime, mtime))
+        sizes.append(os.path.getsize(dst))
+    sdf = (
+        spark.readStream.schema("id bigint")
+        .option("maxFilesPerTrigger", 1)
+        .parquet(str(src))
+    )
+    seen: dict[int, int] = {}
+    core.drain_foreach_batch(
+        sdf, lambda _df, bid, batch_bytes: seen.__setitem__(bid, batch_bytes)
+    )
+    assert [seen[b] for b in sorted(seen)] == sizes

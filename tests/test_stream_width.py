@@ -26,6 +26,7 @@ import os
 import pandas as pd
 import pytest
 
+from scylladb_redpanda_cdc_spark.operators import scale
 from scylladb_redpanda_cdc_spark.streaming import core
 
 
@@ -63,7 +64,7 @@ def test_width_is_floor_at_fixture_scale(spark, sf_dir):
     the fixture floor, so micro-batch plans are byte-identical to the
     floored ones."""
     sdf, staged = _staged_stream(spark, sf_dir)
-    assert core._fs_bytes(spark, staged) < core.STREAM_WIDTH_GATE_BYTES
+    assert core._fs_bytes(spark, staged) < scale.GATE_BYTES
     assert core.stream_shuffle_width(spark, sdf) == core.STREAM_SINK_SHUFFLE_PARTITIONS
     # Non-file and absent sources also take the floor.
     assert core.stream_shuffle_width(spark, None) == core.STREAM_SINK_SHUFFLE_PARTITIONS
@@ -72,7 +73,7 @@ def test_width_is_floor_at_fixture_scale(spark, sf_dir):
 def test_sizing_formula_above_gate(spark, sf_dir, monkeypatch):
     sdf, staged = _staged_stream(spark, sf_dir)
     nbytes = core._fs_bytes(spark, staged)
-    monkeypatch.setattr(core, "STREAM_WIDTH_GATE_BYTES", 0)
+    monkeypatch.setattr(scale, "GATE_BYTES", 0)
     target = max(1, nbytes // 24)  # ~24 sized tasks
     monkeypatch.setattr(core, "STREAM_TARGET_TASK_SOURCE_BYTES", target)
     assert core.stream_shuffle_width(spark, sdf) == math.ceil(nbytes / target)
@@ -92,7 +93,7 @@ def test_multi_source_streams_sum_their_bytes(spark, sf_dir, monkeypatch):
     paths = core.stream_source_paths(joined)
     assert paths == [staged, staged]
     nbytes = core._fs_bytes(spark, staged)
-    monkeypatch.setattr(core, "STREAM_WIDTH_GATE_BYTES", 0)
+    monkeypatch.setattr(scale, "GATE_BYTES", 0)
     monkeypatch.setattr(core, "STREAM_TARGET_TASK_SOURCE_BYTES", nbytes)
     assert core.stream_shuffle_width(spark, joined) == 2
 
@@ -107,7 +108,7 @@ def test_width_reaches_the_micro_batch_plan(spark, sf_dir, monkeypatch):
     foreachBatch while the stream runs), and it is restored after."""
     sdf, staged = _staged_stream(spark, sf_dir)
     nbytes = core._fs_bytes(spark, staged)
-    monkeypatch.setattr(core, "STREAM_WIDTH_GATE_BYTES", 0)
+    monkeypatch.setattr(scale, "GATE_BYTES", 0)
     target = max(1, nbytes // 7)
     monkeypatch.setattr(core, "STREAM_TARGET_TASK_SOURCE_BYTES", target)
     expected = core.stream_shuffle_width(spark, sdf)
@@ -146,7 +147,7 @@ def test_s17_s19_results_invariant_under_forced_adaptive_width(
         qid: _canon(specs[qid].build(spark, sf_dir).toPandas())
         for qid in ("s17_stream_incremental_mv", "s19_stream_redelivery_dedup")
     }
-    monkeypatch.setattr(core, "STREAM_WIDTH_GATE_BYTES", 0)
+    monkeypatch.setattr(scale, "GATE_BYTES", 0)
     monkeypatch.setattr(core, "STREAM_TARGET_TASK_SOURCE_BYTES", 4096)
     for qid, expected in base.items():
         forced = _canon(specs[qid].build(spark, sf_dir).toPandas())
@@ -178,7 +179,7 @@ def test_changelog_staging_bounds_write_tasks_above_gate(
 
     # fixture discipline: below the gate one file per batch
     assert ops._changelog_files_per_batch(spark, sf_dir, 3) == 1
-    monkeypatch.setattr(core, "STREAM_WIDTH_GATE_BYTES", 0)
+    monkeypatch.setattr(scale, "GATE_BYTES", 0)
     src = core.table_bytes(spark, sf_dir, "orders")
     # (n_files, files per batch asked of the write target): a few files
     # per batch, and more than 60 — past the one-minute-per-batch spacing
@@ -240,11 +241,11 @@ def test_scratch_routing_by_bytes_hint(monkeypatch):
     import os
 
     assert core.tmpdir("hint_none").startswith(core._SCRATCH_ROOT)
-    small = core.SCRATCH_TMPFS_GATE_BYTES - 1
+    small = scale.GATE_BYTES - 1
     assert core.tmpdir("hint_small", bytes_hint=small).startswith(
         core._SCRATCH_ROOT
     )
-    big = core.tmpdir("hint_big", bytes_hint=core.SCRATCH_TMPFS_GATE_BYTES)
+    big = core.tmpdir("hint_big", bytes_hint=scale.GATE_BYTES)
     assert big.startswith(core._SCRATCH_DISK_ROOT)
     if core._SCRATCH_ROOT != core._SCRATCH_DISK_ROOT:
         assert not big.startswith(core._SCRATCH_ROOT)
